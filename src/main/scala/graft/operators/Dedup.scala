@@ -77,7 +77,9 @@ object Dedup {
     // index" step and may spill, which is fine.
     val sh = shingleSet(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
+    // Per-doc set sizes, built only on the two branches that score with
+    // them; the carried-size branch below never needs the aggregate.
+    def cnt = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     // The lossy df cut (if any) applies to candidate generation only;
     // scoring always uses the UNFILTERED sets.
     val candInput =
@@ -258,8 +260,8 @@ object Dedup {
     * free (`first` over a constant-per-group column), and callers score
     * with [[scorePairsCarried]] instead of re-aggregating a per-doc count
     * table from the exploded shingle set and joining it on twice
-    * (measured r15, CntCarryProbe: 3.60 → 2.66 s median at sf0.1 on the
-    * x2_jaccard_pairs shape, equal-or-better at sf1 — one fewer
+    * (measured r15, OPTIMIZATION_r15.md: 3.60 → 2.66 s median at sf0.1
+    * on the x2_jaccard_pairs shape, equal-or-better at sf1 — one fewer
     * corpus-sized aggregation pass plus two fewer joins).
     */
   private def sharedShingleIntersections(sh: DataFrame, idCol: String,

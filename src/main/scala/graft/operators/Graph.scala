@@ -23,33 +23,6 @@ object Graph {
     */
   private val frontierBroadcastMaxRows = 1L << 22
 
-  /** PageRank in PURE INTEGER arithmetic: ranks are longs in units of
-    * `1/scale`, every step is integer division (`div`) and integer
-    * multiply-add, so the result is bit-identical in any engine and under
-    * any partitioning — double-precision PageRank cannot gate exactly
-    * because partial-sum order perturbs the low bits.
-    *
-    * Per iteration, with damping fixed at 0.85 = 17/20:
-    * {{{ rank'(v) = (3*scale) div 20  +  (17 * sum over in-edges u→v of
-    *                (rank(u) div outdeg(u))) div 20 }}}
-    * Dangling mass and div-truncation remainders are dropped (documented
-    * deviation from the stochastic formulation — ranks are a stable
-    * *ordering* signal, not probabilities; the oracle replays the identical
-    * recurrence).
-    *
-    * Scale posture: each iteration is one equijoin of the edge list with
-    * the (node-sized) rank table plus one aggregation — both hash-shuffles
-    * on node id; the edge list (with outdeg attached) is computed once and
-    * persisted across iterations. Nothing on the driver but the loop
-    * counter. Overflow headroom: 17 * Σ contrib < 17 * n * scale must stay
-    * under 2^63 — the default scale=1e9 is safe past 5×10^8 nodes.
-    *
-    * @param edges directed (src, dst) long columns; pass both directions
-    *              for an undirected graph
-    * @param iters fixed iteration count (callers wanting convergence-test
-    *              semantics wrap this the way resolveClusters does)
-    * @return (id, rank) for every node appearing in `edges`
-    */
   /** Multi-source BFS: minimum hop distance from any seed node, bounded at
     * `maxHops`. Classic frontier expansion — per round, one equijoin of the
     * edge list with the (shrinking) frontier plus an anti join against the
@@ -1005,33 +978,35 @@ object Graph {
     // join, so the support counts are exact regardless of fpp.
     def supportOf(e: DataFrame, eRows: Long): DataFrame = {
       import org.apache.spark.sql.graft.BloomOps
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
+      import org.apache.spark.sql.execution.SQLExecution
       // The Bloom sketch and the wedge-pivot degree sums are two small
       // independent aggregates over the same pinned edge set; run
       // sequentially they were two back-to-back driver jobs of almost
-      // pure fixed cost (each re-scans cached blocks). Submitting them
-      // from two threads lets the scheduler overlap their stages (guide
-      // §2.6 — actions are only sequential because the driver calls them
-      // sequentially), so the pre-enumeration latency is max, not sum.
-      val sketchF = Future {
-        e.agg(BloomOps.bloomAgg(struct(col("s"), col("t")),
-            math.max(eRows, 1L), 0.01).as("bf"))
-          .head().getAs[Array[Byte]]("bf")
-      }
+      // pure fixed cost (each re-scans cached blocks). Submitting one
+      // from a second thread lets the scheduler overlap their stages
+      // (guide §2.6 — actions are only sequential because the driver
+      // calls them sequentially), so the pre-enumeration latency is max,
+      // not sum. The thread runs with the caller's local properties, so
+      // its job keeps the caller's job group, pool and description.
       val dd = e.select(col("s").as("id"), lit(1L).as("o"), lit(0L).as("i"))
         .unionByName(
           e.select(col("t").as("id"), lit(0L).as("o"), lit(1L).as("i")))
         .groupBy("id").agg(sum("o").as("dout"), sum("i").as("din"))
-      val wF = Future {
+      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+      val wF = try SQLExecution.withThreadLocalCaptured(
+          e.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          pool) {
         dd.agg(
           sum((col("din") * col("dout")).cast("decimal(38,0)")).as("wio"),
           sum((col("dout") * (col("dout") - 1)).cast("decimal(38,0)"))
             .as("woo")).head()
+      } finally pool.shutdown()
+      val sketch = e.agg(BloomOps.bloomAgg(struct(col("s"), col("t")),
+          math.max(eRows, 1L), 0.01).as("bf"))
+        .head().getAs[Array[Byte]]("bf")
+      val w = try wF.get() catch {
+        case x: java.util.concurrent.ExecutionException => throw x.getCause
       }
-      val sketch = Await.result(sketchF, Duration.Inf)
-      val w = Await.result(wF, Duration.Inf)
       def dec(i: Int): BigInt = Option(w.getDecimal(i))
         .map(d => BigInt(d.toBigInteger)).getOrElse(BigInt(0))
       val sourcePivot = dec(1) < dec(0)

@@ -943,7 +943,7 @@ object Maintenance extends QueryModule {
     // expression actually lands in the scan's partition filters. (The
     // dim filter must be an attribute=literal comparison: a bare boolean
     // column is simplified before PartitionPruning runs and then fails
-    // its isLikelySelective test — found with tools/DppProbe.)
+    // its isLikelySelective test — PLANS.md, round-4 third batch.)
     QueryDef("s11_dpp", Some("""
       SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cnt,
              CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)

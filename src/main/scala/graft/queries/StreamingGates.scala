@@ -56,9 +56,10 @@ object StreamingGates extends QueryModule {
     *    RocksDB adds per-batch store-open cost and wins nothing at test
     *    state sizes — see OPTIMIZATION_r15.md).
     *
-    * The shuffle-partition override is restored after termination so the
-    * BATCH work around the stream (staging writes, final reads) keeps the
-    * session's planning envelope.
+    * Both overrides are restored after termination (the provider is
+    * unset again if it was unset) so the BATCH work around the stream
+    * (staging writes, final reads) and later gates keep the session's
+    * planning envelope.
     */
   private def runStream(s: SparkSession)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
@@ -70,14 +71,17 @@ object StreamingGates extends QueryModule {
           "state.RocksDBStateStoreProvider"
         case other => other
       }
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prevSp = s.conf.get("spark.sql.shuffle.partitions")
+    val prevProv = s.conf.getAll.get(provKey)
     sp.foreach(v => s.conf.set("spark.sql.shuffle.partitions", v))
-    prov.foreach(v =>
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", v))
+    prov.foreach(v => s.conf.set(provKey, v))
     try {
       start.awaitTermination()
     } finally {
       sp.foreach(_ => s.conf.set("spark.sql.shuffle.partitions", prevSp))
+      prov.foreach(_ => prevProv.fold(s.conf.unset(provKey))(
+        s.conf.set(provKey, _)))
     }
   }
 

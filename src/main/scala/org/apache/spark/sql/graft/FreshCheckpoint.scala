@@ -144,19 +144,4 @@ object FreshCheckpoint {
     val n = rdd.count()
     Pinned(spark.internalCreateDataFrame(rdd, df.schema), rdd, n)
   }
-
-  /** Lazy variant: no forcing count — the blocks materialize with the
-    * CALLER's first action over the returned df (`rows` is therefore -1).
-    * Right for loops that run their own per-round aggregate anyway (the
-    * convergence test doubles as the forcing action), where the eager
-    * count is a whole extra job of pure fixed cost per round. Same
-    * default-stats / truncated-lineage properties as `pinned`.
-    */
-  def lazyPinned(df: DataFrame): Pinned = {
-    val spark = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-    pin(spark, rdd)
-    Pinned(spark.internalCreateDataFrame(rdd, df.schema), rdd, -1L)
-  }
 }

@@ -461,6 +461,35 @@ class GraphSpec extends SparkSpec {
     assert(run(e.unionAll(rev), 1) == expect)
   }
 
+  test("kTrussPeel: every job, side thread included, keeps the caller's group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val e = (for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b))
+      .toDF("src", "dst")
+    val sc = spark.sparkContext
+    // Two groups in a row: a pooled thread created under the first must
+    // not carry it into the second run's jobs.
+    def groupsUnder(group: String): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          seen.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+      }
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, "kTrussPeel")
+      try Graph.kTrussPeel(e, k = 4L, rounds = 1).collect()
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.sql.graft.ListenerDrain(sc)
+        sc.removeSparkListener(l)
+      }
+      seen.toArray(Array.empty[String]).toSeq
+    }
+    Seq("ktruss-a", "ktruss-b").foreach { g =>
+      val seen = groupsUnder(g)
+      assert(seen.nonEmpty && seen.forall(_ == g), seen)
+    }
+  }
+
   test("degreeHistogram: star graph — hub degree n, leaves degree 1") {
     // Undirected star 0-{1,2,3}: hub degree 3, three leaves degree 1.
     // Endpoint mass m = 6: degree 1 share 3/6, degree 3 share 3/6.

@@ -8,23 +8,6 @@ class SampleSpec extends SparkSpec {
 
   private def docs = spark.read.parquet(sf("documents"))
 
-  test("bernoulli: same membership under any partitioning") {
-    val one = docs.repartition(1)
-    val many = docs.repartition(13)
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.filter(Sample.bernoulli("doc_id", 25))
-        .select("doc_id").as[Long].collect().toSet
-    assert(ids(one) == ids(many))
-    val n = ids(one).size.toDouble / docs.count()
-    assert(n > 0.1 && n < 0.4, s"~25% sample, got $n")
-  }
-
-  test("bernoulli is a pure filter — no shuffle") {
-    val plan = docs.filter(Sample.bernoulli("doc_id", 25))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"))
-  }
-
   test("bernoulliPortable matches its md5 definition and 0/100 edge cases") {
     val all = docs.filter(Sample.bernoulliPortable("doc_id", "zz")).count()
     val none = docs.filter(Sample.bernoulliPortable("doc_id", "00")).count()

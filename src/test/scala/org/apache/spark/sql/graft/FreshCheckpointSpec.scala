@@ -57,18 +57,6 @@ class FreshCheckpointSpec extends SparkSpec {
     p.rdd.unpersist(blocking = false)
   }
 
-  test("lazyPinned under the conf checkpoints on the caller's first action") {
-    import spark.implicits._
-    withCkptDir { dir =>
-      val p = FreshCheckpoint.lazyPinned((1 to 500).toDF("x"))
-      assert(p.rows == -1L)
-      assert(p.df.count() == 500L) // the forcing action
-      assert(p.rdd.isCheckpointed)
-      assert(p.rdd.getCheckpointFile.exists(_.contains(dir.toString)))
-      p.rdd.unpersist(blocking = false)
-    }
-  }
-
   test("release reaps durable round files; default mode has none to reap") {
     import spark.implicits._
     withCkptDir { dir =>
